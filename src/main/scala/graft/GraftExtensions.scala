@@ -1,12 +1,69 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.rules.Rule
+import graft.joins.{KnnGridJoinRule, SpatialJoinStrategy}
+import graft.plans._
 
-/** Central registration point for everything the engine adds to a stock
-  * SparkSession: spatial functions, spatial-join strategy, optimizer rules.
-  * Idempotent — safe to call on every entry point.
+/** Installs graft on a SparkSession: spatial functions, the spatial-join
+  * strategy and the optimizer rules. Installing graft takes two steps:
+  *
+  *   SparkSession.builder()
+  *     .config("spark.sql.extensions", "graft.GraftSparkSessionExtensions")
+  *     .getOrCreate()
+  *   GraftExtensions.install(spark)
+  *
+  * The extension injects what must exist when the session is built: the
+  * KNN capture rule and the early rules. `install` adds everything else
+  * and is idempotent, so every entry point may call it. A session built
+  * without the extension still works after `install` alone, but it lacks
+  * the KNN pushdown barrier (a filter above an `st_knn` join is pushed
+  * below it, sj06) and runs the early rules late, after Spark's
+  * operator optimizations (gp01 loses its inferred `IsNotNull` pushed
+  * filters; sj17's full-outer rewrite carries unpruned columns).
   */
 object GraftExtensions {
+
+  /** Where a graft optimizer rule runs. The split was checked on all
+    * gates: moving every rule to either phase changes plans. */
+  sealed trait Phase
+
+  /** Injected by [[GraftSparkSessionExtensions]] into Spark's
+    * operator-optimization batches, so filter inference, pushdown and
+    * column pruning still run over the rewrite (gp01, sj17). */
+  case object Early extends Phase
+
+  /** Appended by `install` to `experimental.extraOptimizations`, Spark's
+    * last optimizer batch, so the rule matches the join shapes Spark's
+    * operator optimizations leave behind. Injected early, the as-of plans
+    * of q24/q25/q27 turn into a SortMergeJoin and sj10/sj16 change. */
+  case object Late extends Phase
+
+  /** graft's optimizer rules, declared once, in the order they run within
+    * their phase. A session built without the extension runs them all
+    * late, in this order. */
+  private[graft] val rules: Seq[(Phase, SparkSession => Rule[LogicalPlan])] = Seq(
+    (Early, _ => GeoPruneRule),
+    (Early, _ => RasterJoinRule),
+    (Early, GridSpatialJoinRule(_)),
+    (Early, KnnGridJoinRule(_)),
+    (Early, _ => RasterLoadRule),
+    (Late, BandedRangeJoinRule(_)),
+    (Late, SemiUnderDistinctRule(_)),
+    // must precede AsOfAggregateRule within the batch: the rotation
+    // matches the Aggregate node the as-of rewrite then replaces
+    (Late, AggregateJoinReorderRule(_)),
+    // between the rotation (which creates the Join(probe, agg) shape)
+    // and the bare-aggregate rewrite (which would consume the Aggregate)
+    (Late, AsOfProbeJoinRule(_)),
+    (Late, AsOfAggregateRule(_)),
+    (Late, SphereJoinRule(_)))
+
+  /** Whether the session was built with [[GraftSparkSessionExtensions]]. */
+  private def extensionInjected(spark: SparkSession): Boolean =
+    spark.sessionState.analyzer.postHocResolutionRules.contains(KnnJoinCaptureRule)
+
   def install(spark: SparkSession): Unit = {
     // default the streaming state store to RocksDB (spilled to local
     // disk, bounded executor heap) unless the user chose a provider.
@@ -51,54 +108,13 @@ object GraftExtensions {
     }
     graft.functions.GraftFunctions.register(spark)
     graft.sources.RandomGeometry.registerTable(spark)
-    val cur = spark.experimental.extraStrategies
-    if (!cur.exists(_.isInstanceOf[graft.joins.SpatialJoinStrategy]))
-      spark.experimental.extraStrategies =
-        cur :+ graft.joins.SpatialJoinStrategy(spark)
+    val strategies = spark.experimental.extraStrategies
+    if (!strategies.exists(_.isInstanceOf[SpatialJoinStrategy]))
+      spark.experimental.extraStrategies = strategies :+ SpatialJoinStrategy(spark)
+    val phases: Set[Phase] = if (extensionInjected(spark)) Set(Late) else Set(Early, Late)
     val opts = spark.experimental.extraOptimizations
-    if (!opts.contains(graft.plans.GeoPruneRule))
-      spark.experimental.extraOptimizations = opts :+ graft.plans.GeoPruneRule
-    val optsR = spark.experimental.extraOptimizations
-    if (!optsR.contains(graft.plans.RasterJoinRule))
-      spark.experimental.extraOptimizations = optsR :+ graft.plans.RasterJoinRule
-    val opts2 = spark.experimental.extraOptimizations
-    if (!opts2.exists(_.isInstanceOf[graft.plans.GridSpatialJoinRule]))
-      spark.experimental.extraOptimizations =
-        opts2 :+ graft.plans.GridSpatialJoinRule(spark)
-    val opts3 = spark.experimental.extraOptimizations
-    if (!opts3.exists(_.isInstanceOf[graft.joins.KnnGridJoinRule]))
-      spark.experimental.extraOptimizations =
-        opts3 :+ graft.joins.KnnGridJoinRule(spark)
-    val opts4 = spark.experimental.extraOptimizations
-    if (!opts4.contains(graft.plans.RasterLoadRule))
-      spark.experimental.extraOptimizations = opts4 :+ graft.plans.RasterLoadRule
-    val opts5 = spark.experimental.extraOptimizations
-    if (!opts5.exists(_.isInstanceOf[graft.plans.BandedRangeJoinRule]))
-      spark.experimental.extraOptimizations =
-        opts5 :+ graft.plans.BandedRangeJoinRule(spark)
-    val opts5a = spark.experimental.extraOptimizations
-    if (!opts5a.exists(_.isInstanceOf[graft.plans.SemiUnderDistinctRule]))
-      spark.experimental.extraOptimizations =
-        opts5a :+ graft.plans.SemiUnderDistinctRule(spark)
-    // must precede AsOfAggregateRule within the batch: the rotation
-    // matches the Aggregate node the as-of rewrite then replaces
-    val opts5b = spark.experimental.extraOptimizations
-    if (!opts5b.exists(_.isInstanceOf[graft.plans.AggregateJoinReorderRule]))
-      spark.experimental.extraOptimizations =
-        opts5b :+ graft.plans.AggregateJoinReorderRule(spark)
-    // between the rotation (which creates the Join(probe, agg) shape)
-    // and the bare-aggregate rewrite (which would consume the Aggregate)
-    val opts5c = spark.experimental.extraOptimizations
-    if (!opts5c.exists(_.isInstanceOf[graft.plans.AsOfProbeJoinRule]))
-      spark.experimental.extraOptimizations =
-        opts5c :+ graft.plans.AsOfProbeJoinRule(spark)
-    val opts6 = spark.experimental.extraOptimizations
-    if (!opts6.exists(_.isInstanceOf[graft.plans.AsOfAggregateRule]))
-      spark.experimental.extraOptimizations =
-        opts6 :+ graft.plans.AsOfAggregateRule(spark)
-    val opts7 = spark.experimental.extraOptimizations
-    if (!opts7.exists(_.isInstanceOf[graft.plans.SphereJoinRule]))
-      spark.experimental.extraOptimizations =
-        opts7 :+ graft.plans.SphereJoinRule(spark)
+    val missing = rules.collect { case (phase, rule) if phases(phase) => rule(spark) }
+      .filterNot(r => opts.exists(_.getClass == r.getClass))
+    spark.experimental.extraOptimizations = opts ++ missing
   }
 }

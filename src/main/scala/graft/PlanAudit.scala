@@ -63,12 +63,7 @@ object PlanAudit {
     }
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.extensions", "graft.GraftSparkSessionExtensions")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    GraftExtensions.install(spark)
+    val spark = GraftSession.local()
     val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
     val entries = audit(spark, dir)
     entries.foreach { e =>

@@ -3,7 +3,6 @@ package graft
 import java.nio.file.{Files, Paths, StandardOpenOption}
 import java.nio.charset.StandardCharsets
 
-import org.apache.spark.sql.SparkSession
 
 /** Optimization-round tooling: writes `.explain("formatted")` output for
   * every gate query (or the names passed as args) to plans/<outDir>/, one
@@ -12,23 +11,25 @@ import org.apache.spark.sql.SparkSession
   * builder fn stages side inputs still run that staging, same as any
   * plan audit).
   *
+  * Expression, plan and RDD ids and lambda identities are masked, so two runs
+  * of the same code write identical files and `diff -r` compares plans.
+  *
   * Usage: runMain graft.PlanDump <suffix> [queryName...]
-  *   suffix "before" -> plans/r17/<name>_before.txt
+  *   suffix "before" -> plans/r18/<name>_before.txt
   */
 object PlanDump {
+  /** Masks the parts of a plan that differ between runs of the same code. */
+  def mask(plan: String): String = plan
+    .replaceAll("#\\d+", "#x")
+    .replaceAll("\\$\\$Lambda[^@\\s]*@\\p{XDigit}+", "\\$\\$Lambda")
+    .replaceAll("RDD\\[\\d+\\]", "RDD[x]")
+    .replaceAll("plan_id=\\d+", "plan_id=x")
+
   def main(args: Array[String]): Unit = {
     val suffix = if (args.nonEmpty) args(0) else "before"
     val names = args.drop(1)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.GraftSparkSessionExtensions")
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftExtensions.install(spark)
+    val spark = GraftSession.local()
     val outDir = Paths.get(sys.env.getOrElse("SPARK_GRAFT_PLANS_DIR", "plans/r18"))
     Files.createDirectories(outDir)
     val selected =
@@ -37,8 +38,8 @@ object PlanDump {
     selected.foreach { case (name, fn) =>
       try {
         val df = fn(spark, sfDir)
-        val txt = df.queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode)
+        val txt = mask(df.queryExecution.explainString(
+          org.apache.spark.sql.execution.FormattedMode))
         Files.write(outDir.resolve(s"${name}_$suffix.txt"),
           txt.getBytes(StandardCharsets.UTF_8),
           StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)

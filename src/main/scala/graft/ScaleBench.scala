@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.functions.GraftFunctions.st
 import graft.operators.SpatialJoins
@@ -37,34 +37,25 @@ object ScaleBench {
   private def sqrtM(m: Int): Double = math.sqrt(m.toDouble)
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val mBig = sys.env.getOrElse("SPARK_GRAFT_SCALE_MULT", "10").toInt
-    val spark = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.GraftSparkSessionExtensions")
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.driver.memory", "16g")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     // measurement hook: force a specific streaming state-store provider
     // (install() treats an explicitly-set key as the user's choice) —
     // lets the same workload run under RocksDB vs the heap store
-    sys.env.get("SPARK_GRAFT_SS_PROVIDER").foreach(p =>
-      spark.conf.set("spark.sql.streaming.stateStore.providerClass", p))
+    val provider = sys.env.get("SPARK_GRAFT_SS_PROVIDER")
+      .map("spark.sql.streaming.stateStore.providerClass" -> _)
     // same idea for RocksDB changelog checkpointing (default true when
     // the provider default applies): set explicitly to measure on/off
-    sys.env.get("SPARK_GRAFT_SS_CHANGELOG").foreach(v => spark.conf.set(
-      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", v))
+    val changelog = sys.env.get("SPARK_GRAFT_SS_CHANGELOG")
+      .map("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> _)
     // generic A/B hook: ';'-separated key=value session confs (e.g.
     // spark.graft.cc.localLimit=4194304 to re-measure the old CC cap, or
     // spark.graft.knn.occCover=false for the legacy cover path)
-    sys.env.get("SPARK_GRAFT_EXTRA_CONF").foreach(_.split(";").foreach { kv =>
+    val extra = sys.env.get("SPARK_GRAFT_EXTRA_CONF").toSeq.flatMap(_.split(";")).map { kv =>
       val i = kv.indexOf('=')
       require(i > 0, s"SPARK_GRAFT_EXTRA_CONF: bad entry '$kv'")
-      spark.conf.set(kv.take(i), kv.drop(i + 1))
-    })
-    GraftExtensions.install(spark)
+      kv.take(i) -> kv.drop(i + 1)
+    }
+    val spark = GraftSession.local(conf = (provider ++ changelog ++ extra).toMap)
 
     // TIME-CHUNKED streaming staging: write `df` (whose `id` column
     // orders event time) as id-ordered chunk files with strictly

@@ -1,20 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Ad-hoc SQL runner with the engine installed: `runMain graft.Sql "<sql>"`.
   * Registers the sf0.01 testdata tables as temp views. */
 object Sql {
   def main(args: Array[String]): Unit = {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.GraftSparkSessionExtensions")
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    GraftExtensions.install(spark)
+    val spark = GraftSession.local()
     Seq("region", "nation", "customer", "supplier", "part", "orders", "lineitem",
       "documents", "embeddings").foreach { n =>
       Tables.t(spark, dir, n).createOrReplaceTempView(n)

@@ -2,6 +2,8 @@ package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.analysis.{FunctionRegistry, FunctionRegistryBase}
 import org.apache.spark.sql.catalyst.expressions.Expression
 
 /** SQL + Column-DSL registration for every engine function
@@ -49,8 +51,19 @@ object GraftFunctions {
     (GeomScalars.registry ++ RasterFunctions.registry ++ RasterOps.registry ++
       GeoArrowFunctions.registry ++ aggregates ++ sketches)
       .foreach { case (name, builder) =>
-      reg.createOrReplaceTempFunction(name, builder, "built-in")
+      registerOnce(reg, FunctionRegistry.builtin, name, builder)
     }
+  }
+
+  /** Registers `builder` under `name` unless the session already has its
+    * own function there: graft's from an earlier install, or one the user
+    * registered. A Spark built-in of the same name (Spark 4.1 ships
+    * `st_asbinary`, `st_srid`, ...) is still replaced. */
+  private[graft] def registerOnce[T](reg: FunctionRegistryBase[T],
+      builtin: FunctionRegistryBase[T], name: String, builder: Seq[Expression] => T): Unit = {
+    val id = FunctionIdentifier(name)
+    if (reg.lookupFunctionBuilder(id) == builtin.lookupFunctionBuilder(id))
+      reg.createOrReplaceTempFunction(name, builder, "built-in")
   }
 
   /** User extension surface (§2.8; reference: SedonaScalarUDF kernel

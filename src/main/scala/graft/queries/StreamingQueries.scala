@@ -67,7 +67,7 @@ object StreamingQueries {
     s.conf.getOption("spark.graft.stream.statePartitions")
       .map(_.toInt).getOrElse(8)
 
-  // (opt r18 attribution, profiled via DebugProf4 progress JSON on a
+  // (opt r18 attribution, profiled from StreamingQueryProgress JSON on a
   // quiet box: the per-gate floor is ~85 ms of per-store checkpoint
   // machinery per state store instance — 4 stores x 8 partitions for the
   // join gates, measured equal under heap AND RocksDB providers, so it

@@ -184,9 +184,10 @@ object RandomGeometry {
 
   /** Register `sd_random_geometry` as a SQL table-valued function. */
   def registerTable(spark: SparkSession): Unit = {
+    import org.apache.spark.sql.catalyst.analysis.TableFunctionRegistry
     import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
-    spark.sessionState.tableFunctionRegistry.createOrReplaceTempFunction(
-      "sd_random_geometry",
+    graft.functions.GraftFunctions.registerOnce(spark.sessionState.tableFunctionRegistry,
+      TableFunctionRegistry.builtin, "sd_random_geometry",
       (exprs: Seq[Expression]) => {
         val json = exprs match {
           case Seq(Literal(v, _)) if v != null => v.toString
@@ -195,8 +196,7 @@ object RandomGeometry {
             "sd_random_geometry() expects one string literal of JSON options")
         }
         table(SparkSession.active, json).queryExecution.logical
-      },
-      "built-in")
+      })
   }
 
   /** n random `nVertices`-gon polygons (star-convex around a center). */
