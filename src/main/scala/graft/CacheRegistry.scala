@@ -2,15 +2,17 @@ package graft
 
 import java.util.concurrent.ConcurrentHashMap
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Tracks DataFrames persisted *internally* by graft rewrites and pipeline
-  * ops (grid left-outer join row-id tagging, minhash/jaccard signature
-  * reuse, DBSCAN/CC lineage barriers) and releases them automatically once
-  * a consuming query finishes.
+  * ops (outer-join row-id tagging in [[graft.plans.OuterFromInner]],
+  * minhash/jaccard signature reuse, DBSCAN/CC lineage barriers) and
+  * releases them automatically once a consuming query finishes.
   *
   * Without this, optimizer-time persists pin their whole input in the
   * block-manager cache for the session lifetime — at 100 TB that is an
@@ -46,10 +48,7 @@ object CacheRegistry {
   /** Sample the monotone QueryExecution id counter: a fresh trivial
     * Dataset's QueryExecution carries the next id — nothing executes. */
   private def qeBarrier(spark: SparkSession, afterCurrent: Boolean): Long =
-    if (afterCurrent)
-      try spark.range(0).queryExecution.id
-      catch { case _: Throwable => Long.MinValue }
-    else Long.MinValue
+    if (afterCurrent) spark.range(0).queryExecution.id else Long.MinValue
 
   /** Register a df that the caller has just persisted; returns it.
     *
@@ -89,13 +88,13 @@ object CacheRegistry {
     * the rewrite must not leave them pinned for the session). */
   def release(df: DataFrame): Unit = {
     caches.remove(df)
-    try df.unpersist(blocking = false) catch { case _: Throwable => () }
+    try df.unpersist(blocking = false) catch { case NonFatal(_) => () }
   }
 
   /** Manual release path: unpersist every tracked internal cache now. */
   def releaseAll(): Unit = {
     caches.forEach { (df, _) =>
-      try df.unpersist(blocking = false) catch { case _: Throwable => () }
+      try df.unpersist(blocking = false) catch { case NonFatal(_) => () }
     }
     caches.clear()
   }
@@ -107,7 +106,7 @@ object CacheRegistry {
     try df.sparkSession.sharedState.cacheManager
       .lookupCachedData(df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]])
       .map(_.cachedRepresentation.cacheBuilder)
-    catch { case _: Throwable => None }
+    catch { case NonFatal(_) => None }
 
   private final class SweepListener extends QueryExecutionListener {
     private def sweep(qe: QueryExecution): Unit = {
@@ -122,7 +121,7 @@ object CacheRegistry {
             case _ => ()
           }
           (b.result(), r.result())
-        } catch { case _: Throwable => (Set.empty[AnyRef], Set.empty[AnyRef]) }
+        } catch { case NonFatal(_) => (Set.empty[AnyRef], Set.empty[AnyRef]) }
       if (builders.isEmpty && rdds.isEmpty) return
       caches.forEach { (df, entry) =>
         if (qe.id > entry.barrier) {
@@ -132,7 +131,7 @@ object CacheRegistry {
           }
           if (hit) {
             caches.remove(df)
-            try df.unpersist(blocking = false) catch { case _: Throwable => () }
+            try df.unpersist(blocking = false) catch { case NonFatal(_) => () }
           }
         }
       }

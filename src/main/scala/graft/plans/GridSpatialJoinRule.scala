@@ -2,13 +2,13 @@ package graft.plans
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateFunction, Max, Min}
 import org.apache.spark.sql.catalyst.plans.{Cross, FullOuter, Inner, LeftOuter}
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.types.LongType
 import graft.joins.SpatialPredicate
 import graft.functions.GeomScalars
+import RangeJoinShapes.hasEquiConjunct
 
 /** Planner-level large-large spatial join — the 100 TB path for SQL users.
   *
@@ -41,26 +41,17 @@ import graft.functions.GeomScalars
   * optimization time. Resolution from `spark.graft.join.grid.nx/ny`
   * (default 64x64; size so a cell holds O(10k) rows at your scale).
   * `spark.graft.join.grid.enabled=false` disables the rewrite (falls back
-  * to BroadcastNestedLoopJoin). Inner joins only; outer large-large
-  * spatial joins fall back.
+  * to BroadcastNestedLoopJoin).
+  *
+  * Join types: INNER / CROSS, plus two through [[OuterFromInner]]:
+  * large-large LEFT OUTER (this rule's rewrite over a row-id-tagged left)
+  * and FULL OUTER at every size (the plain inner join over both tagged
+  * sides).
   */
 case class GridSpatialJoinRule(session: SparkSession) extends Rule[LogicalPlan] {
 
   private def conf(key: String, default: String): String =
     session.conf.getOption(key).getOrElse(default)
-
-  private def hasEquiConjunct(cond: Expression, left: LogicalPlan, right: LogicalPlan): Boolean = {
-    def split(e: Expression): Seq[Expression] = e match {
-      case And(l, r) => split(l) ++ split(r)
-      case other => Seq(other)
-    }
-    split(cond).exists {
-      case EqualTo(a, b) =>
-        (a.references.subsetOf(left.outputSet) && b.references.subsetOf(right.outputSet)) ||
-          (a.references.subsetOf(right.outputSet) && b.references.subsetOf(left.outputSet))
-      case _ => false
-    }
-  }
 
   override def apply(plan: LogicalPlan): LogicalPlan = {
     if (conf("spark.graft.join.grid.enabled", "true") != "true") return plan
@@ -74,152 +65,21 @@ case class GridSpatialJoinRule(session: SparkSession) extends Rule[LogicalPlan] 
           case _ => j
         }
       case j @ Join(left, right, LeftOuter, Some(cond), _)
-          if !hasEquiConjunct(cond, left, right) && bothLarge(left, right)
-            && left.output.map(_.name).toSet
-              .intersect(right.output.map(_.name).toSet).isEmpty =>
+          if !hasEquiConjunct(cond, left, right) && bothLarge(left, right) =>
         SpatialPredicate.extract(cond, left, right) match {
           case Some(ex) if ex.distance.forall(_.references.subsetOf(left.outputSet)) =>
-            rewriteLeftOuter(j, left, right, ex).getOrElse(j)
+            OuterFromInner(session, j)(t => rewrite(t.left, t.right, ex)).getOrElse(j)
           case _ => j
         }
       // FULL OUTER fires at EVERY size: without the rewrite Spark's only
       // plan is a BroadcastNestedLoopJoin (correct, quadratic refine), so
       // even the broadcast-sized case wins from inner-join + anti-pads —
-      // the inner join below re-enters planning and takes the broadcast
+      // the plain inner join re-enters planning and takes the broadcast
       // index path (small side) or this rule's grid path (both large).
       case j @ Join(left, right, FullOuter, Some(cond), _)
-          if !j.isStreaming && !hasEquiConjunct(cond, left, right) =>
-        SpatialPredicate.extract(cond, left, right) match {
-          case Some(_) => rewriteFullOuter(j, left, right, cond).getOrElse(j)
-          case None => j
-        }
-    }
-  }
-
-  /** FULL OUTER: the reference's spatial join supports inner/left/right/
-    * full (rust/sedona-spatial-join/src/exec.rs:88, test_sjoin.py:34-36);
-    * here full-outer assembles from the INNER spatial join over row-id-
-    * tagged sides plus BOTH anti-pads (the row-id tag + null-pad scheme
-    * `SphereJoinRule.rewriteLeftType` / `rewriteLeftOuter` already prove):
-    *
-    *   L' = L + __fsj_lid (persisted: both branches must see one id set)
-    *   R' = R + __fsj_rid (persisted)
-    *   inner = L' JOIN R' ON cond            -- broadcast or grid planned
-    *   full  = inner ∪ (L' ANTI matchedL) × nulls ∪ nulls × (R' ANTI matchedR)
-    *
-    * All column plumbing is positional (attribute-based) so shared names
-    * across sides are fine. The matched-id sides are distinct long sets —
-    * broadcast-sized in the anti joins by construction at any data scale
-    * where the inner result itself is computable. */
-  private def rewriteFullOuter(
-      j: Join, lChild: LogicalPlan, rChild: LogicalPlan,
-      cond: Expression): Option[LogicalPlan] = {
-    import org.apache.spark.sql.functions._
-    import org.apache.spark.sql.graft.DatasetBridge
-    if (j.output.exists(a => a.name == "__fsj_lid" || a.name == "__fsj_rid" ||
-        a.name == "__fsj_mid" || a.name == "__fsj_plid" || a.name == "__fsj_prid"))
-      return None
-    val lDF = graft.CacheRegistry.register(
-      DatasetBridge.ofRows(session, lChild)
-        .withColumn("__fsj_lid", monotonically_increasing_id())
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    val rDF = graft.CacheRegistry.register(
-      DatasetBridge.ofRows(session, rChild)
-        .withColumn("__fsj_rid", monotonically_increasing_id())
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    // the tagged sides keep the children's attribute ids, so the original
-    // condition resolves against them unchanged
-    // Abandoned-rewrite bail-outs must release every cache created above
-    // (ADVICE r16): a declined rewrite otherwise pins lDF/rDF/pairs for
-    // the whole session.
-    def bail(extra: org.apache.spark.sql.DataFrame*): Option[LogicalPlan] = {
-      (Seq(lDF, rDF) ++ extra).foreach(graft.CacheRegistry.release)
-      None
-    }
-    val inner = lDF.join(rDF, DatasetBridge.column(cond), "inner")
-    val innerAttrs = inner.queryExecution.analyzed.output
-    val nL = lChild.output.length
-    val nR = rChild.output.length
-    if (innerAttrs.length != nL + 1 + nR + 1) return bail()
-    val lidInner = innerAttrs(nL)
-    val ridInner = innerAttrs.last
-    // Persist ONLY the narrow matched-id pair set: the (possibly
-    // large-large grid) inner spatial join executes ONCE, and the union
-    // branch plus both matched-id sets all read the two-long pairs —
-    // the wide result rows rebuild via equi hash joins against the
-    // already-persisted sides (the KNN winner-rejoin pattern).
-    val pairs = graft.CacheRegistry.register(
-      inner.select(DatasetBridge.column(lidInner).as("__fsj_plid"),
-          DatasetBridge.column(ridInner).as("__fsj_prid"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    val pairsOut = pairs.queryExecution.analyzed.output
-    val pLid = DatasetBridge.column(pairsOut.head)
-    val pRid = DatasetBridge.column(pairsOut.last)
-    val matchedL = pairs.select(pLid.as("__fsj_mid")).distinct()
-    val matchedR = pairs.select(pRid.as("__fsj_mid")).distinct()
-    val lTagId = lDF.queryExecution.analyzed.output.last
-    val rTagId = rDF.queryExecution.analyzed.output.last
-    val lCols = lChild.output.map(DatasetBridge.column)
-    val rCols = rChild.output.map(DatasetBridge.column)
-    // the rejoin is a SELF-join (pairs' lineage contains both sides), so
-    // Spark de-dups the right occurrences under fresh attribute ids —
-    // project the rebuilt wide row POSITIONALLY from the joined output
-    val rejoined = pairs
-      .join(lDF, pLid === DatasetBridge.column(lTagId))
-      .join(rDF, pRid === DatasetBridge.column(rTagId))
-    val rjOut = rejoined.queryExecution.analyzed.output
-    if (rjOut.length != 2 + nL + 1 + nR + 1) return bail(pairs)
-    val matchedRows = rejoined.select(
-      (rjOut.slice(2, 2 + nL) ++ rjOut.slice(2 + nL + 1, 2 + nL + 1 + nR))
-        .map(DatasetBridge.column): _*)
-    val antiL = lDF.join(matchedL,
-        DatasetBridge.column(lTagId) === col("__fsj_mid"), "left_anti")
-      .select(lCols ++ rChild.output.map(a => lit(null).cast(a.dataType)): _*)
-    val antiR = rDF.join(matchedR,
-        DatasetBridge.column(rTagId) === col("__fsj_mid"), "left_anti")
-      .select(lChild.output.map(a => lit(null).cast(a.dataType)) ++ rCols: _*)
-    val result = matchedRows.unionAll(antiL).unionAll(antiR)
-    val analyzed = result.queryExecution.optimizedPlan
-    if (analyzed.output.length != j.output.length) bail(pairs)
-    else Some(Project(j.output.zip(analyzed.output).map { case (orig, a) =>
-      Alias(a, orig.name)(exprId = orig.exprId)
-    }, analyzed))
-  }
-
-  /** Large-large LEFT OUTER: inner grid join over a row-id-tagged left
-    * side, then null-padded anti rows unioned back. The tagged left is
-    * persisted inside the rewrite so both branches observe identical ids.
-    */
-  private def rewriteLeftOuter(
-      j: Join, lChild: LogicalPlan, rChild: LogicalPlan,
-      ex: SpatialPredicate.Extracted): Option[LogicalPlan] = {
-    import org.apache.spark.sql.functions._
-    import org.apache.spark.sql.graft.DatasetBridge
-    bounds(lChild, rChild, ex).map { b =>
-      val nx = conf("spark.graft.join.grid.nx", "64").toInt
-      val ny = conf("spark.graft.join.grid.ny", "64").toInt
-      val lDF = graft.CacheRegistry.register(
-        DatasetBridge.ofRows(session, lChild)
-          .withColumn("__gsj_id", monotonically_increasing_id())
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-      val rDF = DatasetBridge.ofRows(session, rChild)
-      val lNames = lChild.output.map(_.name)
-      val rNames = rChild.output.map(_.name)
-      var inner = graft.operators.SpatialJoins.gridJoin(
-        lDF, rDF, DatasetBridge.column(ex.leftGeom), DatasetBridge.column(ex.rightGeom),
-        ex.predName, bounds = Some(b), nx = nx, ny = ny,
-        distance = ex.distance.map(DatasetBridge.column))
-      ex.remainder.foreach(r => inner = inner.filter(DatasetBridge.column(r)))
-      val matched = inner.select(col("__gsj_id")).distinct()
-      val anti = lDF.join(matched, Seq("__gsj_id"), "left_anti")
-        .select(lNames.map(col) ++
-          rChild.output.map(a => lit(null).cast(a.dataType).as(a.name)): _*)
-      val result = inner.select((lNames ++ rNames).map(col): _*).unionAll(anti)
-      val analyzed = result.queryExecution.optimizedPlan
-      val byName = analyzed.output.map(a => a.name -> a).toMap
-      Project(j.output.map { orig =>
-        Alias(byName(orig.name), orig.name)(exprId = orig.exprId)
-      }, analyzed)
+          if !j.isStreaming && !hasEquiConjunct(cond, left, right) &&
+            SpatialPredicate.extract(cond, left, right).isDefined =>
+        OuterFromInner(session, j)(Some(_)).getOrElse(j)
     }
   }
 
@@ -243,8 +103,6 @@ case class GridSpatialJoinRule(session: SparkSession) extends Rule[LogicalPlan] 
       // envelope doubles — codegen'd arithmetic, no per-pair parse. DWithin
       // expands the left envelope by d so cells/ref-point of the pair's
       // d-neighbourhood intersection stay consistent on both paths.
-      val arr4 = org.apache.spark.sql.types.ArrayType(
-        org.apache.spark.sql.types.DoubleType, containsNull = false)
       def envProject(child: LogicalPlan, geom: Expression, name: String,
           expand: Option[Expression]): (LogicalPlan, AttributeReference) = {
         val rawAlias = Alias(b("sd_envelope4")(Seq(geom)), s"${name}raw")()

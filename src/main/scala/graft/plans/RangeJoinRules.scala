@@ -108,21 +108,19 @@ object RangeJoinShapes {
   * whose "interval" is inverted (lA > lD) keep raw theta-join semantics:
   * the pair is still caught in the cell of the reference point
   * max(lA, rC), which both spans provably cover whenever the two
-  * conjuncts hold. The cell width is `spark.graft.join.band.cellwidth`
-  * when set; otherwise a one-pass max-interval-length pre-pass over both
-  * (already pruned) children picks the smallest width that caps per-row
-  * fanout at 2 cells. The rewritten join has an equi-conjunct on the cell
-  * id, so Catalyst plans a shuffled hash/sort-merge join and AQE handles
-  * sizing and skew — the machinery a dedicated IEJoin/interval-join
-  * operator would otherwise reimplement.
+  * conjuncts hold. A one-pass max-interval-length pre-pass over both
+  * (already pruned) children picks the smallest cell width that caps
+  * per-row fanout at 2 cells. The rewritten join has an equi-conjunct on
+  * the cell id, so Catalyst plans a shuffled hash/sort-merge join and AQE
+  * handles sizing and skew — the machinery a dedicated
+  * IEJoin/interval-join operator would otherwise reimplement.
   *
   * `spark.graft.join.band.enabled=false` disables the rewrite. Inner,
-  * cross, and left-outer joins (the outer form via a row-id-tagged
-  * inner join + anti-join null pad). The rewrite fires unless the
-  * smaller side is under `spark.graft.join.band.minSideBytes` (~1k
-  * rows by default) — a broadcast BNLJ is quadratic in the pair count
-  * even when one side "fits broadcast", so broadcastability alone is
-  * not a reason to skip banding.
+  * cross, and LEFT OUTER joins (the outer form through [[OuterFromInner]]:
+  * this rewrite over a row-id-tagged left). The rewrite fires unless the
+  * smaller side is under 64 KB (~1k rows) — a broadcast BNLJ is quadratic
+  * in the pair count even when one side "fits broadcast", so
+  * broadcastability alone is not a reason to skip banding.
   */
 case class BandedRangeJoinRule(session: SparkSession) extends Rule[LogicalPlan] {
   import RangeJoinShapes._
@@ -134,14 +132,12 @@ case class BandedRangeJoinRule(session: SparkSession) extends Rule[LogicalPlan] 
     * evaluates the condition for every (left, right) pair — with the
     * default 10 MB broadcast threshold the "small" side can be ~100k
     * rows, i.e. 100k condition evals per probe row, which dwarfs the
-    * banded plan's one shuffle at any real scale. Below the cutoff
-    * (~1k rows) the per-probe scan is cheaper than exploding and
-    * shuffling both sides, so Spark's broadcast plan stands. */
-  private def worthBanding(left: LogicalPlan, right: LogicalPlan): Boolean = {
-    if (session.sessionState.conf.autoBroadcastJoinThreshold < 0) return true
-    val cutoff = conf("spark.graft.join.band.minSideBytes", "65536").toLong
-    left.stats.sizeInBytes.min(right.stats.sizeInBytes) > cutoff
-  }
+    * banded plan's one shuffle at any real scale. Below 64 KB (~1k rows)
+    * the per-probe scan is cheaper than exploding and shuffling both
+    * sides, so Spark's broadcast plan stands. */
+  private def worthBanding(left: LogicalPlan, right: LogicalPlan): Boolean =
+    session.sessionState.conf.autoBroadcastJoinThreshold < 0 ||
+      left.stats.sizeInBytes.min(right.stats.sizeInBytes) > 65536
 
   override def apply(plan: LogicalPlan): LogicalPlan = {
     if (conf("spark.graft.join.band.enabled", "true") != "true") return plan
@@ -149,46 +145,12 @@ case class BandedRangeJoinRule(session: SparkSession) extends Rule[LogicalPlan] 
       case j @ Join(left, right, jt, Some(cond), _)
           if (jt == Inner || jt == Cross) && !j.isStreaming &&
             !hasEquiConjunct(cond, left, right) && worthBanding(left, right) =>
-        extract(cond, left, right).flatMap(rewrite(j, _)).getOrElse(j)
+        extract(cond, left, right).map(rewrite(j, _)).getOrElse(j)
       case j @ Join(left, right, LeftOuter, Some(cond), _)
           if !j.isStreaming && !hasEquiConjunct(cond, left, right) &&
-            worthBanding(left, right) &&
-            left.output.map(_.name).toSet
-              .intersect(right.output.map(_.name).toSet).isEmpty =>
-        extract(cond, left, right).flatMap(rewriteLeftOuter(j, _)).getOrElse(j)
-    }
-  }
-
-  /** Large-large LEFT OUTER range join: inner banded join over a
-    * row-id-tagged left side, then null-padded anti rows unioned back —
-    * the same construction `GridSpatialJoinRule.rewriteLeftOuter`
-    * proved for spatial predicates. The tagged left is persisted inside
-    * the rewrite so both branches observe identical ids; disjoint
-    * column names across sides required (the anti branch selects by
-    * name). */
-  private def rewriteLeftOuter(j: Join, b: RangeJoinShapes.Band): Option[LogicalPlan] = {
-    import org.apache.spark.sql.functions._
-    import org.apache.spark.sql.graft.DatasetBridge
-    val lDF = graft.CacheRegistry.register(
-      DatasetBridge.ofRows(session, j.left)
-        .withColumn("__brj_id", monotonically_increasing_id())
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    val lPlan = lDF.queryExecution.analyzed
-    val innerJoin = Join(lPlan, j.right, Inner, j.condition, JoinHint.NONE)
-    rewrite(innerJoin, b).map { innerPlan =>
-      val lNames = j.left.output.map(_.name)
-      val rNames = j.right.output.map(_.name)
-      val inner = DatasetBridge.ofRows(session, innerPlan)
-      val matched = inner.select(col("__brj_id")).distinct()
-      val anti = lDF.join(matched, Seq("__brj_id"), "left_anti")
-        .select(lNames.map(col) ++
-          j.right.output.map(a => lit(null).cast(a.dataType).as(a.name)): _*)
-      val result = inner.select((lNames ++ rNames).map(col): _*).unionAll(anti)
-      val analyzed = result.queryExecution.optimizedPlan
-      val byName = analyzed.output.map(a => a.name -> a).toMap
-      Project(j.output.map { orig =>
-        Alias(byName(orig.name), orig.name)(exprId = orig.exprId)
-      }, analyzed)
+            worthBanding(left, right) =>
+        extract(cond, left, right)
+          .flatMap(b => OuterFromInner(session, j)(t => Some(rewrite(t, b)))).getOrElse(j)
     }
   }
 
@@ -204,7 +166,7 @@ case class BandedRangeJoinRule(session: SparkSession) extends Rule[LogicalPlan] 
       yield Band(lLow, rHigh, rLow, lHigh)
   }
 
-  private def rewrite(j: Join, b: Band): Option[LogicalPlan] = {
+  private def rewrite(j: Join, b: Band): LogicalPlan = {
     val w = cellWidth(j.left, j.right, b)
     def cellsOf(a: Expression, bb: Expression): Expression = {
       val ca = cellOf(toLong(a), w)
@@ -228,8 +190,8 @@ case class BandedRangeJoinRule(session: SparkSession) extends Rule[LogicalPlan] 
       cellOf(Greatest(Seq(toLong(b.lLow), toLong(b.rLow))), w), lcell)
     val newCond = Seq[Expression](EqualTo(lcell, rcell), refCell,
       j.condition.get).reduce(And)
-    Some(Project(j.left.output ++ j.right.output,
-      Join(lgen, rgen, Inner, Some(newCond), JoinHint.NONE)))
+    Project(j.left.output ++ j.right.output,
+      Join(lgen, rgen, Inner, Some(newCond), JoinHint.NONE))
   }
 
   /** Smallest width that caps per-row fanout at 2 cells: the max ABSOLUTE
@@ -239,27 +201,19 @@ case class BandedRangeJoinRule(session: SparkSession) extends Rule[LogicalPlan] 
     * (lo > hi) theta semantics by exploding least..greatest of the
     * endpoint cells, so a strongly inverted row sized against only the
     * positive lengths would fan out |span|/width cells — abs keeps
-    * per-row fanout <= 2 for inverted rows too. Pin
-    * `spark.graft.join.band.cellwidth` to skip the pre-pass. */
-  private def cellWidth(left: LogicalPlan, right: LogicalPlan, b: Band): Long =
-    conf("spark.graft.join.band.cellwidth", "auto") match {
-      case "auto" =>
-        def maxLen(plan: LogicalPlan, lo: Expression, hi: Expression): Long = {
-          val m = Alias(Max(Abs(Subtract(toLong(hi), toLong(lo))))
-            .toAggregateExpression(), "m")()
-          val rows = session.sessionState
-            .executePlan(Aggregate(Nil, Seq(m), plan))
-            .executedPlan.executeCollect()
-          if (rows.isEmpty || rows(0).isNullAt(0)) 0L else rows(0).getLong(0)
-        }
-        math.max(1L, math.max(maxLen(left, b.lLow, b.lHigh),
-          maxLen(right, b.rLow, b.rHigh)))
-      case s => {
-        val w = s.toLong
-        require(w > 0, s"spark.graft.join.band.cellwidth must be positive, got $s")
-        w
-      }
+    * per-row fanout <= 2 for inverted rows too. */
+  private def cellWidth(left: LogicalPlan, right: LogicalPlan, b: Band): Long = {
+    def maxLen(plan: LogicalPlan, lo: Expression, hi: Expression): Long = {
+      val m = Alias(Max(Abs(Subtract(toLong(hi), toLong(lo))))
+        .toAggregateExpression(), "m")()
+      val rows = session.sessionState
+        .executePlan(Aggregate(Nil, Seq(m), plan))
+        .executedPlan.executeCollect()
+      if (rows.isEmpty || rows(0).isNullAt(0)) 0L else rows(0).getLong(0)
     }
+    math.max(1L, math.max(maxLen(left, b.lLow, b.lHigh),
+      maxLen(right, b.rLow, b.rHigh)))
+  }
 }
 
 /** Shape matching + long-embedding helpers shared by the as-of family

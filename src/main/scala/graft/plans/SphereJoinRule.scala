@@ -34,13 +34,13 @@ import graft.functions.GeomScalar
   *     every spherical relation that implies envelope overlap (disjoint
   *     does not, and is not rewritten)
   *
-  * Join types: INNER / CROSS, plus LEFT OUTER via the row-id-tagged
-  * inner join + anti-join null pad proven by `GridSpatialJoinRule`.
-  * `spark.graft.join.sphere.enabled=false` disables;
+  * Join types: INNER / CROSS, plus LEFT OUTER / LEFT SEMI / LEFT ANTI
+  * through [[OuterFromInner]] (this rule's inner grid join over a
+  * row-id-tagged left). `spark.graft.join.sphere.enabled=false` disables;
   * `spark.graft.join.sphere.nx/ny` size the fine grid (default 360x180);
-  * the rewrite is skipped when the smaller side is under
-  * `spark.graft.join.sphere.minSideBytes` (a broadcast BNLJ over a tiny
-  * side is cheaper than two grid explodes).
+  * the rewrite is skipped when the smaller side is under 64 KB and the
+  * pair product stays small (a broadcast BNLJ over a tiny side is cheaper
+  * than two grid explodes).
   */
 case class SphereJoinRule(session: SparkSession) extends Rule[LogicalPlan] {
 
@@ -51,8 +51,7 @@ case class SphereJoinRule(session: SparkSession) extends Rule[LogicalPlan] {
 
   private def worthGrid(left: LogicalPlan, right: LogicalPlan): Boolean = {
     if (session.sessionState.conf.autoBroadcastJoinThreshold < 0) return true
-    val cutoff = BigInt(
-      conf("spark.graft.join.sphere.minSideBytes", "65536").toLong)
+    val cutoff = BigInt(65536)
     val lB = left.stats.sizeInBytes
     val rB = right.stats.sizeInBytes
     // A broadcast BNLJ runs the geodesic refine on EVERY pair, so its
@@ -76,13 +75,12 @@ case class SphereJoinRule(session: SparkSession) extends Rule[LogicalPlan] {
             !j.isStreaming &&
             !RangeJoinShapes.hasEquiConjunct(cond, left, right) &&
             worthGrid(left, right) =>
-        extract(cond, left, right)
-          .flatMap(rewriteLeftType(j, left, right, jt, _)).getOrElse(j)
+        extract(cond, left, right).flatMap(ex => OuterFromInner(session, j)(t =>
+          Some(innerGridDF(t.left, t.right, ex).queryExecution.analyzed))).getOrElse(j)
     }
   }
 
-  /** Build the inner grid join as a DataFrame over the child plans and
-    * re-alias its output to the original join's exprIds. */
+  /** The inner grid join as a DataFrame over the child plans. */
   private def innerGridDF(left: LogicalPlan, right: LogicalPlan,
       ex: Sphere): org.apache.spark.sql.DataFrame = {
     val nx = conf("spark.graft.join.sphere.nx", "360").toInt
@@ -107,64 +105,6 @@ case class SphereJoinRule(session: SparkSession) extends Rule[LogicalPlan] {
   private def rewrite(j: Join, left: LogicalPlan, right: LogicalPlan,
       ex: Sphere): Option[LogicalPlan] = {
     val analyzed = innerGridDF(left, right, ex).queryExecution.optimizedPlan
-    if (analyzed.output.length != j.output.length) None
-    else Some(Project(j.output.zip(analyzed.output).map { case (orig, a) =>
-      Alias(a, orig.name)(exprId = orig.exprId)
-    }, analyzed))
-  }
-
-  /** LEFT OUTER / LEFT SEMI / LEFT ANTI: inner grid join over a
-    * row-id-tagged left side, then assemble the join type's semantics
-    * from the matched row-id set — null-padded anti rows unioned back
-    * (outer), or a semi/anti join of the tagged left against it.
-    * All column plumbing is POSITIONAL (attribute-based), so sides that
-    * share column names are fine. */
-  private def rewriteLeftType(j: Join, lChild: LogicalPlan, rChild: LogicalPlan,
-      jt: org.apache.spark.sql.catalyst.plans.JoinType,
-      ex: Sphere): Option[LogicalPlan] = {
-    import org.apache.spark.sql.functions._
-    // withColumn would silently REPLACE a user column named __spj_id, and
-    // a user __spj_mid makes the matched-id join condition ambiguous —
-    // decline the rewrite on name overlap (join keeps its default plan)
-    if (j.output.exists(a => a.name == "__spj_id" || a.name == "__spj_mid"))
-      return None
-    val lDF = graft.CacheRegistry.register(
-      DatasetBridge.ofRows(session, lChild)
-        .withColumn("__spj_id", monotonically_increasing_id())
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    val tagged = lDF.queryExecution.analyzed
-    // the tagged left keeps lChild's attribute ids, so ex's geometry
-    // expressions resolve against it unchanged
-    val inner = innerGridDF(tagged, rChild, ex)
-    val innerAttrs = inner.queryExecution.analyzed.output
-    val nL = lChild.output.length
-    val nR = rChild.output.length
-    if (innerAttrs.length != nL + 1 + nR) return None
-    val lAttrs = innerAttrs.take(nL)
-    val idAttr = innerAttrs(nL)
-    val rAttrs = innerAttrs.takeRight(nR)
-    val matched = inner.select(DatasetBridge.column(idAttr).as("__spj_mid"))
-      .distinct()
-    val taggedId = tagged.output.last // the __spj_id tag
-    val lCols = lChild.output.map(DatasetBridge.column)
-    val result = jt match {
-      case LeftSemi =>
-        lDF.join(matched,
-            DatasetBridge.column(taggedId) === col("__spj_mid"), "left_semi")
-          .select(lCols: _*)
-      case LeftAnti =>
-        lDF.join(matched,
-            DatasetBridge.column(taggedId) === col("__spj_mid"), "left_anti")
-          .select(lCols: _*)
-      case _ => // LeftOuter
-        val anti = lDF.join(matched,
-            DatasetBridge.column(taggedId) === col("__spj_mid"), "left_anti")
-          .select(lCols ++
-            rChild.output.map(a => lit(null).cast(a.dataType)): _*)
-        inner.select((lAttrs ++ rAttrs).map(DatasetBridge.column): _*)
-          .unionAll(anti)
-    }
-    val analyzed = result.queryExecution.optimizedPlan
     if (analyzed.output.length != j.output.length) None
     else Some(Project(j.output.zip(analyzed.output).map { case (orig, a) =>
       Alias(a, orig.name)(exprId = orig.exprId)

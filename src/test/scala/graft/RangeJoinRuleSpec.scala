@@ -107,12 +107,30 @@ class RangeJoinRuleSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(got == expect)
     assert(got.exists(_._2 == -1L) && got.exists(_._2 >= 0L),
       "fixture must exercise matched AND unmatched left rows")
+    // sides with the SAME column names: the rewrite plumbs by position
+    events(1200).toDF("id", "v").createOrReplaceTempView("brj_lon_ev")
+    windows(80).toDF("id", "v", "we").createOrReplaceTempView("brj_lon_win")
+    val sameSql = "SELECT l.id, r.id FROM brj_lon_ev l LEFT JOIN brj_lon_win r " +
+      "ON l.v BETWEEN r.v AND r.we"
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(r => (r.getLong(0),
+      if (r.isNullAt(1)) -1L else r.getLong(1))).sorted.toSeq
+    val (sameDf, sameGot) = withBroadcastOff {
+      val df = spark.sql(sameSql)
+      (df, rows(df))
+    }
+    val ps = planString(sameDf)
+    assert(!ps.contains("BroadcastNestedLoopJoin") && !ps.contains("CartesianProduct"),
+      s"same-named left-outer banded rewrite must purge BNLJ:\n$ps")
+    spark.conf.set("spark.graft.join.band.enabled", "false")
+    val sameExpect = try withBroadcastOff(rows(spark.sql(sameSql)))
+      finally spark.conf.set("spark.graft.join.band.enabled", "true")
+    assert(sameGot == sameExpect && sameGot.exists(_._2 == -1L))
   }
 
   test("banded rewrite fires under broadcast when no side is tiny") {
     // a broadcast BNLJ is quadratic in the pair count even when one side
     // "fits broadcast" — the rule bands unless the SMALLER side's stats
-    // are under spark.graft.join.band.minSideBytes
+    // are under 64 KB
     val big1 = events(20000)   // range stats ≈ 160 KB > 64 KB cutoff
     val big2 = windows(12000)
     val joined = big1.join(big2,

@@ -270,6 +270,19 @@ class SpatialJoinSpec extends AnyFunSuite with BeforeAndAfterAll {
       val j2 = p.join(q, st.dwithin(col("pgeom"), col("qgeom"), lit(3.0)), "left_outer")
         .select(col("pid"), col("qid"))
       assert(sortedRows(j2) == exp2)
+      // sides with the SAME column names: the rewrite plumbs by position
+      val a = p.toDF("id", "geom").as("a")
+      val c = q.toDF("id", "geom").as("c")
+      def same(): DataFrame =
+        a.join(c, st.dwithin(col("a.geom"), col("c.geom"), lit(3.0)), "left_outer")
+          .select(col("a.id"), col("c.id"))
+      val js = same()
+      val physS = js.queryExecution.executedPlan.toString
+      assert(!physS.contains("BroadcastNestedLoopJoin"), physS.take(2000))
+      spark.conf.set("spark.graft.join.grid.enabled", "false")
+      val expS = try sortedRows(same())
+        finally spark.conf.set("spark.graft.join.grid.enabled", "true")
+      assert(sortedRows(js) == expS && expS.exists(_.contains("null")))
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
   }
 

@@ -32,10 +32,7 @@ class SphereJoinRuleSpec extends AnyFunSuite with BeforeAndAfterAll {
     try body finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
   }
 
-  private def ruleOff[T](body: => T): T = {
-    spark.conf.set("spark.graft.join.sphere.enabled", "false")
-    try body finally spark.conf.set("spark.graft.join.sphere.enabled", "true")
-  }
+  private def ruleOff[T](body: => T): T = switchedOff("sphere")(body)
 
   /** lon over the full ring (wrap pairs at ±180), lat to ±89.5. */
   private def pts(n: Int, seed: Int, idc: String, gc: String): DataFrame =
@@ -230,27 +227,88 @@ class SphereJoinRuleSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"large pair product must engage the grid even with one small side:\n$pp")
   }
 
-  test("LEFT OUTER declines rewrite when a side already has __spj_id/__spj_mid") {
-    // the left-type rewrite tags the left with __spj_id and joins the
-    // matched-id set as __spj_mid; a user column with either name would be
-    // silently replaced / ambiguous, so the rule must keep the default plan
-    // and still return correct results
-    pts(150, 301, "aid", "ag")
-      .withColumn("__spj_id", col("aid") * 1000)
-      .createOrReplaceTempView("sphr_a")
-    pts(150, 303, "bid", "bg").createOrReplaceTempView("sphr_b")
-    val sql = "SELECT aid, __spj_id, bid FROM sphr_a LEFT JOIN sphr_b " +
-      "ON st_dwithinsphere(ag, bg, 400000.0)"
-    val got = spark.sql(sql).collect()
-      .map(r => (r.getLong(0), r.getLong(1), if (r.isNullAt(2)) -1L else r.getLong(2)))
-      .sorted.toSeq
-    val expect = ruleOff {
-      spark.sql(sql).collect()
-        .map(r => (r.getLong(0), r.getLong(1), if (r.isNullAt(2)) -1L else r.getLong(2)))
-        .sorted.toSeq
+  /** Planar points for the grid rule. */
+  private def planar(n: Int, seed: Int, idc: String, gc: String): DataFrame =
+    spark.range(n).select(col("id").as(idc),
+      st.point(pmod(hash(col("id") * 3 + seed), lit(1000)) / 10.0,
+        pmod(hash(col("id") * 11 + seed), lit(1000)) / 10.0).as(gc))
+
+  /** Long points and [ws, we] spans for the banded rule. */
+  private def stamps(n: Int, seed: Int, idc: String): DataFrame =
+    spark.range(n).select(col("id").as(idc),
+      pmod(hash(col("id"), lit(seed)), lit(50000)).cast("long").as("ts"))
+  private def spans(n: Int, seed: Int, idc: String): DataFrame =
+    spark.range(n).select(col("id").as(idc),
+      pmod(hash(col("id"), lit(seed)), lit(50000)).cast("long").as("ws"))
+      .withColumn("we", col("ws") + pmod(hash(col(idc), lit(seed + 1)), lit(400)))
+
+  /** One input per outer path of the three rewrite rules: the switch that
+    * turns the rule off, the two sides (ids `aid` / `bid`), the join and
+    * its condition. */
+  private def outerPaths: Seq[(String, DataFrame, DataFrame, String, String)] = Seq(
+    ("sphere", pts(150, 301, "aid", "ag"), pts(150, 303, "bid", "bg"),
+      "LEFT JOIN", "st_dwithinsphere(ag, bg, 400000.0)"),
+    ("sphere", pts(150, 301, "aid", "ag"), pts(150, 303, "bid", "bg"),
+      "LEFT SEMI JOIN", "st_dwithinsphere(ag, bg, 400000.0)"),
+    ("sphere", pts(150, 301, "aid", "ag"), pts(150, 303, "bid", "bg"),
+      "LEFT ANTI JOIN", "st_dwithinsphere(ag, bg, 400000.0)"),
+    ("grid", planar(150, 305, "aid", "ag"), planar(150, 307, "bid", "bg"),
+      "LEFT JOIN", "st_dwithin(ag, bg, 3.0)"),
+    ("grid", planar(150, 305, "aid", "ag"), planar(150, 307, "bid", "bg"),
+      "FULL OUTER JOIN", "st_dwithin(ag, bg, 3.0)"),
+    ("band", stamps(300, 309, "aid"), spans(60, 311, "bid"),
+      "LEFT JOIN", "ts BETWEEN ws AND we"))
+
+  private def switchedOff[T](rule: String)(body: => T): T = {
+    val key = s"spark.graft.join.$rule.enabled"
+    spark.conf.set(key, "false")
+    try body finally spark.conf.set(key, "true")
+  }
+
+  test("outer rewrites decline when a side already has a row-id tag column") {
+    // the outer rewrites tag their sides with these names; a user column
+    // with one of them would be replaced by row ids or clash with a tag,
+    // so every rule must keep the default plan, return the rule-off rows
+    // and leave the user column untouched
+    import graft.plans.OuterFromInner.{LeftId, MatchedId, RightId}
+    def opt(r: org.apache.spark.sql.Row, i: Int) = if (r.isNullAt(i)) -1L else r.getLong(i)
+    for ((rule, l, r, how, on) <- outerPaths if !Seq("SEMI", "ANTI").exists(how.contains);
+         onLeft <- Seq(true, false); tag <- Seq(LeftId, RightId, MatchedId)) {
+      val (lv, rv) =
+        if (onLeft) (l.withColumn(tag, col("aid") * 1000), r)
+        else (l, r.withColumn(tag, col("bid") * 1000))
+      lv.createOrReplaceTempView("tagc_l")
+      rv.createOrReplaceTempView("tagc_r")
+      val sql = s"SELECT aid, bid, `$tag` FROM tagc_l $how tagc_r ON $on"
+      def run() = withBroadcastOff {
+        spark.sql(sql).collect().map(x => (opt(x, 0), opt(x, 1), opt(x, 2))).sorted.toSeq
+      }
+      val what = s"$rule $how with $tag on the ${if (onLeft) "left" else "right"}"
+      val got = run()
+      assert(got.nonEmpty && got == switchedOff(rule)(run()), s"$what: results differ")
+      assert(got.forall { case (aid, bid, t) =>
+        val own = if (onLeft) aid else bid
+        own == -1L || t == own * 1000
+      }, s"$what: user column must survive untouched")
     }
-    assert(got.nonEmpty && got == expect)
-    assert(got.forall { case (aid, sid, _) => sid == aid * 1000 },
-      "user __spj_id column must survive untouched")
+  }
+
+  test("outer rewrites release their row-id caches after the consuming query") {
+    val start = CacheRegistry.pinnedCount
+    for (((rule, l, r, how, on), i) <- outerPaths.zipWithIndex) {
+      l.createOrReplaceTempView(s"rel_l$i")
+      r.createOrReplaceTempView(s"rel_r$i")
+      withBroadcastOff {
+        val df = spark.sql(s"SELECT aid FROM rel_l$i $how rel_r$i ON $on")
+        val p = planString(df)
+        assert(!p.contains("BroadcastNestedLoopJoin"), s"$rule $how not rewritten:\n$p")
+        assert(CacheRegistry.pinnedCount > start, s"$rule $how pinned no cache")
+        df.collect()
+      }
+      // listener bus is async; wait for the sweep
+      val deadline = System.nanoTime() + 10_000_000_000L
+      while (CacheRegistry.pinnedCount > start && System.nanoTime() < deadline) Thread.sleep(50)
+      assert(CacheRegistry.pinnedCount == start, s"$rule $how cache not released after action")
+    }
   }
 }
