@@ -73,6 +73,11 @@ object MicroBench {
       time("area_complex")(run(polyComplex.select(st.area(col("geom1"))))),
       time("azimuth")(run(points.select(st.f("st_azimuth", col("geom1"), col("geom2"))))),
       time("intersects_simple")(run(polySimple.select(st.intersects(col("geom1"), col("geom2"))))),
+      // a column against a literal geometry
+      time("intersects_const_window")(run(polySimple.select(st.intersects(col("geom1"),
+        st.makeEnvelope(lit(40.0), lit(40.0), lit(60.0), lit(60.0)))))),
+      time("dwithin_const")(run(points.select(st.f("st_dwithin", col("geom1"),
+        st.point(lit(50.0), lit(50.0)), lit(5.0))))),
       time("contains_complex")(run(polyComplex.select(st.contains(col("geom1"), col("geom2"))))),
       time("distance_points")(run(points.select(st.distance(col("geom1"), col("geom2"))))),
       time("intersection_simple")(run(polySimple.select(st.f("st_intersection", col("geom1"), col("geom2"))))),

@@ -57,21 +57,17 @@ object Dbscan {
     // count, CC materialization) cannot sweep them early. Before r18
     // these barrier caches were never released at all (their consumers
     // carry only the RDD leaf, which the IMR-matching sweep never saw).
-    val barriers = scala.collection.mutable.ArrayBuffer
-      .empty[(DataFrame, org.apache.spark.rdd.RDD[_])]
-    def barrier(d: DataFrame): DataFrame = {
+    /** (frame re-entered through the leaf, persisted frame, its leaf). */
+    def barrier(d: DataFrame): (DataFrame, DataFrame, org.apache.spark.rdd.RDD[_]) = {
       val cached = d.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val leaf = cached.queryExecution.toRdd
-      barriers += ((cached, leaf))
-      DatasetBridge.internalDf(spark, leaf, d.schema)
+      (DatasetBridge.internalDf(spark, leaf, d.schema), cached, leaf)
     }
-    def registerBarriers(): Unit = barriers.foreach { case (c, leaf) =>
-      graft.CacheRegistry.registerForRdd(c, leaf, afterCurrent = true)
-    }
-    val pts = barrier(df.select(id.cast("long").as("__pid"), geom.as("__pg")))
+    val (pts, ptsCached, ptsLeaf) =
+      barrier(df.select(id.cast("long").as("__pid"), geom.as("__pg")))
     val l = pts.select(col("__pid").as("__ida"), col("__pg").as("__ga"))
     val r = pts.select(col("__pid").as("__idb"), col("__pg").as("__gb"))
-    val pairs = barrier(
+    val (pairs, pairsCached, pairsLeaf) = barrier(
       SpatialJoins.gridJoin(l, r, col("__ga"), col("__gb"), "st_dwithin",
           bounds, nx, ny, distance = Some(lit(eps)))
         .filter(col("__ida") =!= col("__idb"))
@@ -88,7 +84,6 @@ object Dbscan {
       val assign = localFinish(pairs, minPts)
       // the pair cache has been consumed into the local arrays; only
       // `pts` is referenced by the returned plan
-      val Seq((ptsCached, ptsLeaf), (pairsCached, _)) = barriers.toSeq
       graft.CacheRegistry.release(pairsCached)
       graft.CacheRegistry.registerForRdd(ptsCached, ptsLeaf,
         afterCurrent = true)
@@ -117,7 +112,8 @@ object Dbscan {
       .groupBy(col("__ida"))
       .agg(min(col("__ccl")).as("__bcl"))
       .select(col("__ida").as("__pid"), col("__bcl"))
-    registerBarriers()
+    graft.CacheRegistry.registerForRdd(ptsCached, ptsLeaf, afterCurrent = true)
+    graft.CacheRegistry.registerForRdd(pairsCached, pairsLeaf, afterCurrent = true)
     pts
       .join(coreCl, Seq("__pid"), "left_outer")
       .join(bAssign, Seq("__pid"), "left_outer")

@@ -23,14 +23,16 @@ class GeoPrunedFileIndex(
   * `<name>_bbox` covering column into additional bbox range conjuncts:
   *
   *   st_intersects(geom, <const>) ∧ ...
-  *     ⇒ st_intersects(geom, <const>) ∧ geom_bbox.xmin <= env.xmax ∧ ...
+  *     ⇒ geom_bbox.xmin <= env.xmax ∧ ... ∧ st_intersects(geom, <const>) ∧ ...
   *
   * The range predicates are plain comparisons on struct fields, which
   * Spark's parquet source pushes down to row-group min/max pruning — this
   * one rewrite buys the reference's covering-column skip
   * (rust/sedona-geoparquet/src/file_opener.rs:315-340 and the ST-predicate
   * → bbox extraction of rust/sedona-expr/src/spatial_filter.rs:50-199).
-  * The original ST predicate stays for exact refinement.
+  * The original ST predicate stays for exact refinement, after the
+  * ranges: the filter rejects most rows with four double compares before
+  * the predicate reads any WKB.
   */
 object GeoPruneRule extends Rule[LogicalPlan] {
 
@@ -42,16 +44,13 @@ object GeoPruneRule extends Rule[LogicalPlan] {
   private def constEnvelope(e: Expression): Option[Envelope] =
     if (e.foldable) {
       e.eval() match {
-        case b: Array[Byte] => Some(GeomIO.read(b).getEnvelopeInternal)
+        case b: Array[Byte] => Some(new Envelope(GeomIO.read(b).getEnvelopeInternal))
         case _ => None
       }
     } else None
 
-  private def bboxFor(child: LogicalPlan, geom: Expression): Option[Attribute] =
-    geom match {
-      case a: Attribute => child.output.find(_.name == a.name + "_bbox")
-      case _ => None
-    }
+  private def bboxFor(child: LogicalPlan, geom: Attribute): Option[Attribute] =
+    child.output.find(_.name == geom.name + "_bbox")
 
   private def rangePreds(bbox: Attribute, env: Envelope): Expression = {
     def f(name: String) = GetStructField(bbox,
@@ -65,39 +64,44 @@ object GeoPruneRule extends Rule[LogicalPlan] {
         GreaterThanOrEqual(f("ymax"), Literal(env.getMinY))))
   }
 
-  /** Filter envelopes per geometry-attribute name: prunable-predicate
-    * conjuncts against a constant, DWithin expanded by its radius;
-    * multiple conjuncts on one attribute intersect. */
-  private def filterEnvelopes(conjuncts: Seq[Expression]): Map[String, Envelope] = {
-    def attrName(e: Expression): Option[String] = e match {
-      case a: Attribute => Some(a.name)
-      case _ => None
+  /** (geometry attribute, query envelope) of every conjunct that bounds
+    * one: a prunable predicate with a constant on either side, or
+    * `st_dwithin` with a foldable distance, whose envelope is expanded
+    * by the radius. One pair per bounded side, in conjunct order. */
+  private def boundedAttributes(conjuncts: Seq[Expression]): Seq[(Attribute, Envelope)] = {
+    def sides(a: Expression, b: Expression, radius: Option[Double]) = {
+      def side(geom: Expression, const: Expression) = geom match {
+        case attr: Attribute => constEnvelope(const).map { env =>
+          radius.foreach(env.expandBy)
+          attr -> env
+        }
+        case _ => None
+      }
+      side(a, b).toSeq ++ side(b, a).toSeq
     }
-    val pairs = conjuncts.flatMap {
-      case GeomScalar(name, Seq(a, b), _, _, _) if prunable(name) =>
-        (for { env <- constEnvelope(b); n <- attrName(a) } yield n -> env).toSeq ++
-          (for { env <- constEnvelope(a); n <- attrName(b) } yield n -> env).toSeq
+    conjuncts.flatMap {
+      case GeomScalar(name, Seq(a, b), _, _, _) if prunable(name) => sides(a, b, None)
       case GeomScalar("st_dwithin", Seq(a, b, d), _, _, _) if d.foldable =>
         val dist = d.eval() match {
           case n: java.lang.Number => n.doubleValue()
           case dec: org.apache.spark.sql.types.Decimal => dec.toDouble
           case _ => 0.0
         }
-        def expanded(c: Expression): Option[Envelope] = constEnvelope(c).map { env =>
-          val e2 = new Envelope(env); e2.expandBy(dist); e2
-        }
-        (for { env <- expanded(b); n <- attrName(a) } yield n -> env).toSeq ++
-          (for { env <- expanded(a); n <- attrName(b) } yield n -> env).toSeq
+        sides(a, b, Some(dist))
       case _ => Nil
     }
-    pairs.groupBy(_._1).map { case (n, es) =>
+  }
+
+  /** Filter envelopes per geometry-attribute name; multiple conjuncts on
+    * one attribute intersect. */
+  private def filterEnvelopes(bounded: Seq[(Attribute, Envelope)]): Map[String, Envelope] =
+    bounded.groupBy(_._1.name).map { case (n, es) =>
       val acc = new Envelope(es.head._2)
       es.tail.foreach { case (_, e) =>
         val i = acc.intersection(e); acc.init(i)
       }
       n -> acc
     }
-  }
 
   /** File-level skip via the `_geo_files.json` manifest: when the filter
     * bounds a geometry column of a single-root, non-partitioned parquet
@@ -141,44 +145,19 @@ object GeoPruneRule extends Rule[LogicalPlan] {
         case o => Seq(o)
       }
       val conjuncts = split(cond)
+      val bounded = boundedAttributes(conjuncts)
       val newChild = child match {
         case lr: LogicalRelation =>
-          pruneFiles(lr, filterEnvelopes(conjuncts)).getOrElse(child)
+          pruneFiles(lr, filterEnvelopes(bounded)).getOrElse(child)
         case _ => child
       }
       val bboxRefs = conjuncts.flatMap(_.references).filter(_.name.endsWith("_bbox")).toSet
-      val added = conjuncts.flatMap {
-        case GeomScalar(name, Seq(a, b), _, _, _) if prunable(name) =>
-          val fromA = for {
-            env <- constEnvelope(b); bbox <- bboxFor(child, a)
-            if !bboxRefs.contains(bbox)
-          } yield rangePreds(bbox, env)
-          val fromB = for {
-            env <- constEnvelope(a); bbox <- bboxFor(child, b)
-            if !bboxRefs.contains(bbox)
-          } yield rangePreds(bbox, env)
-          fromA.toSeq ++ fromB.toSeq
-        case GeomScalar("st_dwithin", Seq(a, b, d), _, _, _) if d.foldable =>
-          val dist = d.eval() match {
-            case n: java.lang.Number => n.doubleValue()
-            case dec: org.apache.spark.sql.types.Decimal => dec.toDouble
-            case _ => 0.0
-          }
-          def expanded(c: Expression): Option[Envelope] = constEnvelope(c).map { env =>
-            val e2 = new Envelope(env); e2.expandBy(dist); e2
-          }
-          val fromA = for {
-            env <- expanded(b); bbox <- bboxFor(child, a)
-            if !bboxRefs.contains(bbox)
-          } yield rangePreds(bbox, env)
-          val fromB = for {
-            env <- expanded(a); bbox <- bboxFor(child, b)
-            if !bboxRefs.contains(bbox)
-          } yield rangePreds(bbox, env)
-          fromA.toSeq ++ fromB.toSeq
-        case _ => Nil
+      val added = bounded.flatMap { case (geom, env) =>
+        bboxFor(child, geom).filterNot(bboxRefs.contains).map(rangePreds(_, env))
       }
+      // the range conjuncts go first: a row they reject never reaches
+      // the exact predicate's WKB decode
       if (added.isEmpty && (newChild eq child)) fl
-      else Filter(added.foldLeft(cond)(And), newChild)
+      else Filter((added :+ cond).reduceLeft(And), newChild)
   }
 }

@@ -192,25 +192,32 @@ object GeoParquet {
     // rust/sedona-geoparquet/src/file_opener.rs:291-309); Hilbert
     // clustering keeps the per-file boxes tight. At 10^6 files this is
     // one footer-sized read+write per file and no data pass.
-    val bbName = if (bboxOn) Some(s"${geomCol}_bbox") else None
+    patchFooters(spark, path, geomCol, if (bboxOn) Some(s"${geomCol}_bbox") else None,
+      bb => geoJsonFor(bb.orElse(dsBounds)),
+      if (version == "2.0.0") Some((geomCol, crs)) else None)
+  }
+
+  /** The footer pass of `write` over the part files of `path`: patch
+    * each footer's `geo` key (`mkGeoJson` of the file's bbox) and native
+    * type, and, when `bbName` names the covering column, write the
+    * `_geo_files.json` manifest. Entries carry [bbox(4), length, mtime];
+    * the reader drops any entry whose live file status mismatches (file
+    * rewritten by another process → never wrongly pruned), and files
+    * without complete bbox statistics are omitted (never pruned). */
+  private[graft] def patchFooters(spark: SparkSession, path: String, geomCol: String,
+      bbName: Option[String], mkGeoJson: Option[Seq[Double]] => String,
+      nativeType: Option[(String, String)]): Unit = {
+    val fs = new org.apache.hadoop.fs.Path(path)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val partPaths = fs.listStatus(new org.apache.hadoop.fs.Path(path))
       .map(_.getPath).filter(_.getName.endsWith(".parquet"))
       .map(_.toString).toSeq
-    val nativeType =
-      if (version == "2.0.0") Some((geomCol, crs)) else None
     val patched: Seq[(String, Option[Seq[Double]], Long, Long)] =
       if (partPaths.isEmpty) Seq.empty
       else spark.sparkContext.parallelize(partPaths, math.min(partPaths.length, 64))
-        .map { f =>
-          GeoParquet.patchFooterGeoStats(f, bbName,
-            bb => geoJsonFor(bb.orElse(dsBounds)), nativeType)
-        }.collect().toSeq
-
-    if (bboxOn) {
-      // manifest entries carry [bbox(4), length, mtime] — the reader
-      // drops any entry whose live file status mismatches (file
-      // rewritten by another process → never wrongly pruned); files
-      // without complete bbox statistics are omitted (never pruned)
+        .map(f => GeoParquet.patchFooterGeoStats(f, bbName, mkGeoJson, nativeType))
+        .collect().toSeq
+    if (bbName.isDefined) {
       val entries = patched.sortBy(_._1).collect {
         case (name, Some(b), l, m) => s""""$name":[${b.mkString(",")},$l,$m]"""
       }
@@ -239,8 +246,9 @@ object GeoParquet {
     * struct `<bb>.{xmin,ymin,xmax,ymax}` (DOUBLE, plain little-endian):
     * min of the xmin/ymin minima and max of the xmax/ymax maxima across
     * row groups — exactly the per-file bbox the manifest needs, with no
-    * data read. None when any row group lacks the statistic (the
-    * manifest then simply omits the file — never wrongly pruned). */
+    * data read. None when any row group lacks the `min_value`/
+    * `max_value` statistic, legacy `min`/`max` alone included (the
+    * manifest then omits the file — never wrongly pruned). */
   private def statsBbox(md: org.apache.parquet.format.FileMetaData,
       bb: String): Option[Seq[Double]] = {
     import scala.jdk.CollectionConverters._
@@ -254,9 +262,11 @@ object GeoParquet {
           val st = cc.getMeta_data.getStatistics
           if (st == null) None
           else {
+            // only the sort-order-aware min_value/max_value: the
+            // deprecated min/max may carry another type's ordering
             val bytes =
-              if (wantMin) { if (st.isSetMin_value) st.getMin_value else if (st.isSetMin) st.getMin else null }
-              else { if (st.isSetMax_value) st.getMax_value else if (st.isSetMax) st.getMax else null }
+              if (wantMin) { if (st.isSetMin_value) st.getMin_value else null }
+              else { if (st.isSetMax_value) st.getMax_value else null }
             if (bytes == null || bytes.length != 8) None
             else Some(java.lang.Double.longBitsToDouble(java.nio.ByteBuffer
               .wrap(bytes).order(java.nio.ByteOrder.LITTLE_ENDIAN).getLong))

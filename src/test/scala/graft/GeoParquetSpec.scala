@@ -8,7 +8,8 @@ import org.scalatest.BeforeAndAfterAll
 import graft.functions.GraftFunctions.st
 import graft.sources.GeoParquet
 
-class GeoParquetSpec extends AnyFunSuite with BeforeAndAfterAll {
+class GeoParquetSpec extends AnyFunSuite with BeforeAndAfterAll
+    with org.apache.spark.sql.catalyst.expressions.PredicateHelper {
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -296,6 +297,91 @@ class GeoParquetSpec extends AnyFunSuite with BeforeAndAfterAll {
       .select("id").collect().map(_.getLong(0)).sorted
     val actual = q.select("id").collect().map(_.getLong(0)).sorted
     assert(actual.sameElements(expected))
+  }
+
+  private def window(df: DataFrame): DataFrame = df.filter(st.intersects(col("geom"),
+    st.makeEnvelope(lit(100.0), lit(100.0), lit(300.0), lit(300.0))))
+
+  test("covered window query: the bbox range conjuncts run before the ST predicate") {
+    import org.apache.spark.sql.catalyst.expressions.BinaryComparison
+    val dir = Files.createTempDirectory("gp").toString + "/order"
+    GeoParquet.write(sample, dir, "geom")
+    val q = window(GeoParquet.read(spark, dir))
+    val ids = q.select("id").collect().map(_.getLong(0)).sorted
+    val filter = q.queryExecution.executedPlan.collectFirst {
+      case f: org.apache.spark.sql.execution.FilterExec => f
+    }.getOrElse(fail("no FilterExec"))
+    val cs = splitConjunctivePredicates(filter.condition)
+    val stAt = cs.indexWhere(_.isInstanceOf[graft.functions.GeomScalar])
+    val rangesAt = cs.indices.filter(i => cs(i).isInstanceOf[BinaryComparison] &&
+      cs(i).references.exists(_.name == "geom_bbox"))
+    assert(stAt >= 0 && rangesAt.size == 4, filter.condition.sql)
+    assert(rangesAt.forall(_ < stAt), filter.condition.sql)
+    assert(ids.sameElements(window(sample).select("id").collect().map(_.getLong(0)).sorted))
+  }
+
+  test("no covering column: GeoPruneRule leaves the plan unchanged") {
+    val excluded = "spark.sql.optimizer.excludedRules"
+    def optimized(q: DataFrame, withRule: Boolean) = {
+      if (!withRule) spark.conf.set(excluded, graft.plans.GeoPruneRule.ruleName)
+      try spark.sessionState.executePlan(q.queryExecution.logical).optimizedPlan
+      finally spark.conf.unset(excluded)
+    }
+    val base = Files.createTempDirectory("gp").toString
+    GeoParquet.write(sample, base + "/plain", "geom", withBbox = false)
+    val plain = window(GeoParquet.read(spark, base + "/plain"))
+    assert(optimized(plain, withRule = true) == optimized(plain, withRule = false))
+    // the same comparison sees the rewrite where a covering column exists
+    GeoParquet.write(sample, base + "/covered", "geom")
+    val covered = window(GeoParquet.read(spark, base + "/covered"))
+    assert(optimized(covered, withRule = true) != optimized(covered, withRule = false))
+  }
+
+  test("footer with only legacy min/max statistics: no manifest entry, window still complete") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.parquet.format.Util
+    val dir = Files.createTempDirectory("gp").toString + "/legacy"
+    GeoParquet.write(sample, dir, "geom", clusterPartitions = 3)
+    val root = new org.apache.hadoop.fs.Path(dir)
+    assert(GeoParquet.fileManifest(spark, root).exists(_.nonEmpty))
+    val geoJson = GeoParquet.footerGeoJson(spark, dir).get
+    // rewrite each footer so its statistics carry only the deprecated
+    // min/max fields, the way legacy writers leave them
+    val parts = new java.io.File(dir).listFiles().filter(_.getName.endsWith(".parquet"))
+    parts.foreach { f =>
+      val raf = new java.io.RandomAccessFile(f, "rw")
+      try {
+        val tail = new Array[Byte](8)
+        raf.seek(raf.length - 8); raf.readFully(tail)
+        val footerLen = java.nio.ByteBuffer.wrap(tail, 0, 4)
+          .order(java.nio.ByteOrder.LITTLE_ENDIAN).getInt
+        val start = raf.length - 8 - footerLen
+        val fb = new Array[Byte](footerLen)
+        raf.seek(start); raf.readFully(fb)
+        val md = Util.readFileMetaData(new java.io.ByteArrayInputStream(fb))
+        md.getRow_groups.asScala.foreach(_.getColumns.asScala.foreach { cc =>
+          val st = cc.getMeta_data.getStatistics
+          if (st != null && st.isSetMin_value) {
+            st.setMin(st.getMin_value); st.setMax(st.getMax_value)
+            st.unsetMin_value(); st.unsetMax_value()
+          }
+        })
+        val bos = new java.io.ByteArrayOutputStream()
+        Util.writeFileMetaData(md, bos)
+        val footer = bos.toByteArray
+        raf.seek(start); raf.write(footer)
+        raf.write(java.nio.ByteBuffer.allocate(4)
+          .order(java.nio.ByteOrder.LITTLE_ENDIAN).putInt(footer.length).array())
+        raf.write("PAR1".getBytes("US-ASCII"))
+        raf.setLength(start + footer.length + 8)
+      } finally raf.close()
+      new java.io.File(f.getParent, s".${f.getName}.crc").delete()
+    }
+    GeoParquet.patchFooters(spark, dir, "geom", Some("geom_bbox"), _ => geoJson, None)
+    assert(GeoParquet.fileManifest(spark, root).contains(Map.empty[String, Array[Double]]))
+    val q = window(GeoParquet.read(spark, dir))
+    assert(q.select("id").collect().map(_.getLong(0)).sorted
+      .sameElements(window(sample).select("id").collect().map(_.getLong(0)).sorted))
   }
 
   test("dwithin filter prunes with expanded envelope") {
